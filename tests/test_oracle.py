@@ -14,9 +14,9 @@ QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def test_query_matches_oracle(name, query_inventory, duck):
     q = QUERIES[name]
-    df = q.spark(spark, sf_dir)
+    df = query_inventory.build(name)
     if q.oracle is None:
         # rows-only check (mirrors the driver's weaker path)
         n = df.count()

@@ -173,24 +173,6 @@ BNLJ_SCALAR_PROOF = {
 }
 
 
-def _walk_bnlj_build_sides(node, out):
-    cls = node.getClass().getSimpleName()
-    if cls == "BroadcastNestedLoopJoinExec":
-        side = node.buildSide().toString()
-        out.append((node.right() if "Right" in side else node.left()).toString())
-    if cls == "AdaptiveSparkPlanExec":
-        _walk_bnlj_build_sides(node.inputPlan(), out)
-    ch = node.children()
-    for i in range(ch.length()):
-        _walk_bnlj_build_sides(ch.apply(i), out)
-    try:  # scalar subqueries hang off expressions, not children
-        sq = node.subqueries()
-        for i in range(sq.length()):
-            _walk_bnlj_build_sides(sq.apply(i), out)
-    except Exception:
-        pass
-
-
 def _provably_scalar(subtree: str) -> bool:
     """True when the physical subtree PROVES a ≤1-row output: an
     ungrouped aggregate (Hash/ObjectHash/Sort), or a keyed aggregate
@@ -204,36 +186,19 @@ def _provably_scalar(subtree: str) -> bool:
     return bool(m and re.search(rf"Filter .*\({m.group(1)}#\d+ = ", subtree))
 
 
-# Building a declared query's DataFrame executes its demo body (the
-# lakehouse/index demos commit state before returning a plan), so one
-# pass over all 335 queries costs minutes at sf0.001. The three
-# whole-inventory audits below (slow-path plan audit, primitive-output
-# audit, BNLJ scalar-proof audit) used to build that inventory once
-# EACH (~260 s per pass, r14 pytest --durations); sharing one build
-# keeps all three audits' coverage at one pass's cost — this is the
-# r14 "keep the suite inside the driver's pytest budget" fix
-# (VERDICT r13 #1), not a coverage change.
-_AUDIT_CACHE: dict = {}
-
-
-def _audit_inventory(spark, sf_dir):
-    if "dfs" not in _AUDIT_CACHE:
-        from unity_to_bigquery_spark.registry import all_queries
-
-        _AUDIT_CACHE["dfs"] = {
-            name: q.spark(spark, sf_dir)
-            for name, q in sorted(all_queries().items())
-        }
-    return _AUDIT_CACHE["dfs"]
-
-
-def test_bnlj_scalar_allowlist_build_sides_provably_one_row(spark, sf_dir):
-    dfs = _audit_inventory(spark, sf_dir)
+# The three whole-inventory audits below (slow-path plan audit,
+# primitive-output audit, BNLJ scalar-proof audit) read the plan facts
+# of one shared build of all 335 declared queries: the session-scoped
+# ``query_inventory`` fixture (tests/conftest.py), which the oracle
+# pass in test_oracle.py fills first. Building a query executes its
+# demo body, ~260 s per whole-inventory pass at sf0.001 — one pass
+# serves the oracle compare and all three audits. The facts are taken
+# from each query's physical plan before it executes, as a fresh build
+# here would see it.
+def test_bnlj_scalar_allowlist_build_sides_provably_one_row(query_inventory):
     bad = []
     for name in sorted(BNLJ_SCALAR_PROOF):
-        plan = dfs[name]._jdf.queryExecution().executedPlan()
-        builds = []
-        _walk_bnlj_build_sides(plan, builds)
+        builds = query_inventory.facts(name).bnlj_build_sides
         if not builds:
             bad.append((name, "allow-listed but plans no BNLJ — stale entry"))
         for b in builds:
@@ -242,10 +207,10 @@ def test_bnlj_scalar_allowlist_build_sides_provably_one_row(spark, sf_dir):
     assert not bad, bad
 
 
-def test_no_unexpected_slow_paths_in_any_plan(spark, sf_dir):
+def test_no_unexpected_slow_paths_in_any_plan(query_inventory):
     offenders = {"BatchEvalPython": [], "CartesianProduct": [], "BroadcastNestedLoopJoin": []}
-    for name, df in _audit_inventory(spark, sf_dir).items():
-        phys = df._jdf.queryExecution().executedPlan().toString()
+    for name in sorted(QUERIES):
+        phys = query_inventory.facts(name).plan
         if "BatchEvalPython" in phys and name not in ROW_PYTHON_ALLOWED:
             offenders["BatchEvalPython"].append(name)
         if "CartesianProduct" in phys:
@@ -255,7 +220,7 @@ def test_no_unexpected_slow_paths_in_any_plan(spark, sf_dir):
     assert not any(offenders.values()), offenders
 
 
-def test_all_query_outputs_are_primitive(spark, sf_dir):
+def test_all_query_outputs_are_primitive(query_inventory):
     """Hard rule 4: declared-query outputs are primitives only — no
     array/struct/map/binary/decimal/timestamp column survives to the
     driver's cross-engine hash compare."""
@@ -264,11 +229,10 @@ def test_all_query_outputs_are_primitive(spark, sf_dir):
         "long", "integer", "smallint", "tinyint", "float", "date",
     }
     bad = []
-    for name, df in _audit_inventory(spark, sf_dir).items():
-        for f in df.schema.fields:
-            t = f.dataType.simpleString()
+    for name in sorted(QUERIES):
+        for col, t in query_inventory.facts(name).schema:
             if t not in allowed:
-                bad.append((name, f.name, t))
+                bad.append((name, col, t))
     assert not bad, bad
 
 

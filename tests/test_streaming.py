@@ -2363,17 +2363,18 @@ def test_stream_multi_file_partition_packing(spark, tmp_path):
 
 
 def test_stream_arrow_fast_path_no_fallback(spark, tmp_path):
-    """The vectorized stream executor (_read_arrow) must handle the CDC
-    semantics set DIRECTLY — insert frames, delete retractions
-    (match_any), eq-anti exclusion, pos-delete ordinals, row-lineage
-    ids (phys AND base+ordinal) — with no silent row-loop fallback
-    (calls it without the try/except) and bit-equal rows vs the row
-    loop itself."""
+    """The one executor (read_file_spec) handles the CDC semantics set
+    directly — insert frames, delete retractions (match), eq-anti
+    exclusion, pos-delete ordinals, row-lineage ids (phys AND
+    base+ordinal) — per planned spec, and the union of its outputs is
+    bit-equal to the independent Spark-plan feed changes_with_type."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from unity_to_bigquery_spark.plans.versioned import VersionedTable
     from unity_to_bigquery_spark.sources.versioned_stream import (
         VersionedTableDataSource,
         VersionedTableStreamReader,
-        _CDCFilePartition,
+        read_file_spec,
     )
 
     root = str(tmp_path / "tbl")
@@ -2396,16 +2397,18 @@ def test_stream_arrow_fast_path_no_fallback(spark, tmp_path):
     schema_ddl = ds.schema()
     struct = spark.createDataFrame([], schema_ddl).schema
     sr = VersionedTableStreamReader(opts, struct)
-    assert sr._pa_schema is not None
+    assert sr._schema == struct
+    target = to_arrow_schema(struct)
     parts = sr._cdc_partitions(0, t.latest_version(), t.manifest())
-    assert any(isinstance(p, _CDCFilePartition) for p in parts)
-    got = set()
+    assert any(p.tail is not None for p in parts)
+    got, rows = set(), []
     for p in parts:
-        out = sr._read_arrow(p)  # raises on any fallback shape
+        out = read_file_spec(p, target)
         got |= {tuple(r.values()) for r in out.to_pylist()}
-        # bit-equality against the row loop for the same partition
-        row_sr = VersionedTableStreamReader(opts)  # no schema: row path
-        assert {tuple(r) for r in row_sr.read(p)} == {
-            tuple(r.values()) for r in out.to_pylist()
-        }
+        rows += [tuple(r.values()) for r in out.to_pylist()]
+    # bit-equality against the Spark-plan twin of the change feed
+    cols = ["k", "v", VersionedTable.ROW_ID_COL, "_change_type",
+            "_commit_version"]
+    batch = t.changes_with_type(0).select(*cols).collect()
+    assert sorted(rows, key=repr) == sorted(map(tuple, batch), key=repr)
     assert got  # the window is non-trivial

@@ -36,24 +36,141 @@ def _ds(spark, root, **opts):
     return r.load()
 
 
-def test_batch_snapshot_matches_programmatic(spark, root):
-    """Plain DSv2 snapshot ≡ read(): MoR equality + positional deletes,
-    column rename, initial default — the full _scan semantics set."""
+def _rows(df):
+    """Multiset of a frame's rows (nested structs included)."""
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _props_df(spark, rows):
+    """rows: (k, lang, score) -> k INT, props STRUCT<lang STRING, score INT>"""
+    return spark.createDataFrame(
+        rows, "k INT, lang STRING, score INT"
+    ).selectExpr("k", "struct(lang, score) AS props").coalesce(1)
+
+
+def _shape_plain_struct(spark, root):
+    t = VersionedTable(spark, root)
+    t.commit_append(_props_df(spark, [(1, "en", 3), (2, "fr", 5)]))
+    t.commit_append(_props_df(spark, [(3, "de", 9)]))
+    return t, (1, 2), ("props", "attrs"), ["k", "attrs"]
+
+
+def _shape_nested_rename_add_promote(spark, root):
+    t = VersionedTable(spark, root)
+    t.commit_append(_props_df(spark, [(1, "en", 3), (2, "fr", 5)]))
+    t.rename_nested_field("props", "lang", "language")
+    t.add_nested_field("props", "rank", "long")
+    t.promote_nested_field("props", "score", "long")
+    t.commit_append(spark.createDataFrame(
+        [(3, "de", 9, 1)], "k INT, language STRING, score LONG, rank LONG"
+    ).selectExpr("k", "struct(language, score, rank) AS props").coalesce(1))
+    return t, (1, 2), ("props", "attrs"), ["k", "attrs"]
+
+
+def _shape_struct_default_nested_rename(spark, root):
+    t = VersionedTable(spark, root)
+    t.commit_append(spark.createDataFrame([(1,), (2,)], "k INT").coalesce(1))
+    t.add_column(
+        "props", "struct<lang:string,score:int>",
+        default="named_struct('lang', 'xx', 'score', 0)",
+    )
+    t.commit_append(
+        _props_df(spark, [(3, "en", 7)]).select(
+            "k", F.col("props").cast("struct<lang:string,score:int>")
+        )
+    )
+    t.rename_nested_field("props", "score", "pts")
+    return t, (1, 2), ("props", "attrs"), ["k", "attrs"]
+
+
+def _shape_column_default(spark, root):
     t = _mk(spark, root)
-    t.delete_rows_where("k = 3", mode="mor")  # positional (DV sidecar)
-    t.commit_delete_where(spark.createDataFrame([(102,)], "k INT"), "k")
     t.add_column("note", "string", default="'n/a'")
     t.commit_append(
         spark.createDataFrame(
             [(999, "z", 0.0, "real")], "k INT, tag STRING, x DOUBLE, note STRING"
         ).coalesce(1)
     )
-    t.rename_column("tag", "label")
+    return t, (3, 102), ("tag", "label"), ["k", "label", "x", "note"]
+
+
+_PARITY_SHAPES = {
+    "plain_struct": _shape_plain_struct,
+    "nested_rename_add_promote": _shape_nested_rename_add_promote,
+    "struct_default_nested_rename": _shape_struct_default_nested_rename,
+    "column_default": _shape_column_default,
+}
+
+
+@pytest.mark.parametrize("shape", list(_PARITY_SHAPES))
+def test_batch_snapshot_matches_programmatic(spark, root, tmp_path, shape):
+    """Every DSv2 reader ≡ its Spark-plan twin on an evolved table:
+    the append stream and the snapshot relation ≡ read(), the batch
+    change feed ≡ changes_with_type(0). Shapes cover nested field-ID
+    mapping (member rename/add/promote), struct and top-level initial
+    defaults; then pre-evolution rows die by position (DV sidecar) and
+    by key and a column is renamed, so the snapshot and the feed's
+    retractions read old files through the evolved layout."""
+    t, (pos_k, eq_k), (old, new), columns = _PARITY_SHAPES[shape](spark, root)
+    register(spark)
+    sink = f"parity_{shape}"
+    (
+        spark.readStream.format("versioned_table").option("path", root)
+        .load()
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    streamed, snap = spark.table(sink), t.read()
+    assert streamed.schema.simpleString() == snap.schema.simpleString()
+    assert _rows(streamed) == _rows(snap), "append stream vs read()"
+    t.delete_rows_where(f"k = {pos_k}", mode="mor")  # positional (DV sidecar)
+    t.commit_delete_where(spark.createDataFrame([(eq_k,)], "k INT"), "k")
+    t.rename_column(old, new)
     ds = _ds(spark, root)
-    assert ds.columns == ["k", "label", "x", "note"]
-    assert {tuple(r) for r in ds.collect()} == {
-        tuple(r) for r in t.read().collect()
-    }
+    assert ds.columns == columns
+    assert _rows(ds) == _rows(t.read()), "snapshot vs read()"
+    cdf = _ds(spark, root, readChangeFeed="true", startingVersion=0)
+    # the Spark-plan feed unions per-commit frames by name, so its
+    # column order follows the first commit's schema: align by name
+    feed = t.changes_with_type(0).select(*cdf.columns)
+    assert _rows(cdf) == _rows(feed), "change feed vs changes_with_type"
+
+
+def test_generated_column_predating_file_refused(spark, root, tmp_path):
+    """The DSv2 relations do not evaluate SQL: a planned file that
+    predates a generated column is refused loudly (naming the column
+    and the programmatic read), never read as NULL. Files written after
+    the column carry materialized values and stream normally."""
+    t = _mk(spark, root, nchunks=1)
+    t.add_generated_column("x2", "double", "x * CAST(2 AS DOUBLE)")
+    v_add = t.latest_version()
+    t.commit_append(
+        spark.createDataFrame([(50, "g", 4.0)], "k INT, tag STRING, x DOUBLE")
+    )
+    refusal = r"(?s)generated column 'x2'.*VersionedTable\.read\(\)"
+    with pytest.raises(Exception, match=refusal):
+        _ds(spark, root).collect()
+
+    def stream(name, **opts):
+        r = spark.readStream.format("versioned_table").option("path", root)
+        for k, v in opts.items():
+            r = r.option(k, str(v))
+        q = (
+            r.load().writeStream.format("memory").queryName(name)
+            .option("checkpointLocation", str(tmp_path / name))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return spark.table(name)
+
+    with pytest.raises(Exception, match=refusal):
+        stream("gen_all")
+    tail = stream("gen_tail", starting_version=v_add)
+    assert [tuple(r) for r in tail.collect()] == [(50, "g", 4.0, 8.0)]
 
 
 def test_batch_version_and_timestamp_asof(spark, root):
@@ -202,13 +319,18 @@ def test_sql_front_door_time_travel(spark, root):
 
 
 def test_batch_arrow_fast_path_no_fallback(spark, root):
-    """The vectorized executor (_read_arrow) must handle the full
-    non-struct semantics set DIRECTLY — eq-deletes (null keys never
-    match), positional deletes, rename, additive evolution NULL-fill,
-    initial default, int→long promotion — with no silent row-loop
-    fallback (this calls it without the try/except)."""
+    """The one executor (read_file_spec) handles the full snapshot
+    semantics set directly — eq-deletes (null keys never match),
+    positional deletes, rename, additive evolution NULL-fill, initial
+    default, int→long promotion — per planned spec, with nothing to
+    fall back to."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from unity_to_bigquery_spark.sources.versioned_batch import (
         make_batch_reader,
+    )
+    from unity_to_bigquery_spark.sources.versioned_stream import (
+        read_file_spec,
     )
 
     t = _mk(spark, root)
@@ -223,12 +345,14 @@ def test_batch_arrow_fast_path_no_fallback(spark, root):
     )
     t.rename_column("tag", "label")
     t.promote_column("k", "bigint")
-    reader = make_batch_reader({"path": root}, t.read().schema)
-    assert reader._pa_schema is not None
+    struct = t.read().schema
+    reader = make_batch_reader({"path": root}, struct)
+    assert reader._schema == struct
+    target = to_arrow_schema(struct)
     rows = set()
     for part in reader.partitions():
         for spec in getattr(part, "items", [part]):  # packed (r14)
-            out = reader._read_arrow(spec)  # raises on any fallback shape
+            out = read_file_spec(spec, target)
             rows |= {tuple(r.values()) for r in out.to_pylist()}
     assert rows == {tuple(r) for r in t.read().collect()}
 

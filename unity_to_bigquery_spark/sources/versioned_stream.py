@@ -11,11 +11,16 @@ Scale/design notes:
   per-file specs are bin-packed into row-budgeted InputPartitions
   (round 14 — see ``_PackedPartition``), so file reads parallelize
   across executors without paying a Python-worker task per tiny file.
-- ``read()`` executes executor-side via pyarrow. Rows cross the
-  Python→JVM boundary (the Data Source API's contract) — fine for
-  incremental tails, which are delta-sized by definition; a bulk
-  backfill should use the batch ``changes()``/``read()`` path, which
-  scans parquet natively in the JVM.
+- Every per-file spec — append stream, change stream and the batch
+  readers of ``versioned_batch`` alike — is derived by ONE pure
+  function (``file_spec``: nested mapping, initial defaults, delete
+  sets, lineage) and read by ONE executor (``read_file_spec``), which
+  assembles Arrow RecordBatches cast to the schema Spark passed the
+  reader. Batches cross the Python→JVM boundary (the Data Source
+  API's contract) — fine for incremental tails, which are delta-sized
+  by definition; a bulk backfill should use the batch
+  ``changes()``/``read()`` path, which scans parquet natively in the
+  JVM.
 - Append-only contract, like Delta's streaming source without
   ``skipChangeCommits``: any commit inside a consumed range that
   deletes OR rewrites live rows (delete_where, replace_keys,
@@ -44,6 +49,9 @@ Scale/design notes:
 """
 
 from __future__ import annotations
+
+import os
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -156,37 +164,208 @@ class VersionedTableDataSource(DataSource):
         return make_batch_reader(self.options, schema)
 
 
-def _ddl_field_names(ddl: str) -> list[str]:
-    """Top-level field names of a ``struct<a:bigint,b:array<int>>``
-    simpleString — parsed without a SparkSession (depth-0 comma split)."""
+def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """Top-level ``(name, type_str)`` pairs of a
+    ``struct<a:bigint,b:array<int>>`` simpleString — parsed without a
+    SparkSession (depth-0 colon/comma split)."""
     inner = ddl.strip()
     if inner.startswith("struct<") and inner.endswith(">"):
         inner = inner[len("struct<"):-1]
-    names, depth, tok = [], 0, []
+    out, depth, tok = [], 0, []
     for ch in inner:
         if ch == "<":
             depth += 1
         elif ch == ">":
             depth -= 1
         elif ch == "," and depth == 0:
-            names.append("".join(tok))
+            out.append("".join(tok))
             tok = []
             continue
         tok.append(ch)
     if tok:
-        names.append("".join(tok))
-    return [t.split(":", 1)[0].strip() for t in names if t.strip()]
+        out.append("".join(tok))
+    return [
+        tuple(s.strip() for s in t.split(":", 1))
+        for t in out
+        if t.strip()
+    ]
 
 
-def _phys_fields(m: dict) -> list[str]:
-    """Logical schema field order, translated to the PHYSICAL parquet
-    column names under column mapping (round 10) — physical names are
-    immutable per field, so the end manifest's mapping is correct for
-    every file in the window regardless of renames inside it; the
-    output schema stays logical by position."""
-    names = _ddl_field_names(m["schema"])
-    phys = {e["name"]: e["phys"] for e in (m.get("column_mapping") or [])}
-    return [phys.get(n, n) for n in names]
+class ScanLayout(NamedTuple):
+    """The physical read layout of a plan's OUTPUT manifest, shared by
+    every per-file spec of the plan. Physical names are immutable per
+    field (column mapping, round 10; nested field-ID mapping, round 12),
+    so the output manifest's mapping reads every file of a window
+    correctly regardless of renames inside it; the output schema stays
+    logical by position.
+
+    ``columns``: physical top-level column names in logical order.
+    ``structs``: {column_idx: [physical member names in logical member
+    order]} for every top-level struct column. ``phys_of``: logical →
+    physical top-level names. ``data_dir``: absolute data directory."""
+
+    columns: list
+    structs: dict
+    phys_of: dict
+    data_dir: str
+
+
+def scan_layout(root: str, m: dict) -> ScanLayout:
+    """The :class:`ScanLayout` of manifest ``m`` of the table at ``root``."""
+    from unity_to_bigquery_spark.plans.versioned import DATA_DIR
+
+    cm = m.get("column_mapping") or []
+    phys_of = {e["name"]: e["phys"] for e in cm}
+    nested = {
+        e["name"]: {n["name"]: n["phys"] for n in e["fields"]}
+        for e in cm
+        if e.get("fields")
+    }
+    logical = _ddl_fields(m["schema"])
+    structs = {
+        i: [nested.get(name, {}).get(mn, mn) for mn, _t in _ddl_fields(tstr)]
+        for i, (name, tstr) in enumerate(logical)
+        if tstr.startswith("struct<")
+    }
+    return ScanLayout(
+        [phys_of.get(n, n) for n, _t in logical],
+        structs,
+        phys_of,
+        os.path.join(root, DATA_DIR),
+    )
+
+
+class FileReadSpec(InputPartition):
+    """One data file's contribution to a DSv2 read — the single spec
+    type of the snapshot, append-stream and change-feed planners.
+
+    - ``path`` / ``rows``: absolute data file path and its ``__nrows``
+      stat (packing weight; None when unknown).
+    - ``columns`` / ``structs``: the plan's :class:`ScanLayout`.
+    - ``fills``: {column_idx: value} initial defaults applying to THIS
+      file (decided at plan time from file_versions).
+    - ``anti``: (keyfile_path, key_col, row_col) equality-delete
+      triples — rows matching ANY are dead. ``match``: when non-empty,
+      only rows matching at least one triple emit (the rows a commit
+      deleted or revived).
+    - ``pos_anti``: (pairfile_path, target_rel) positional-delete pairs
+      — file ordinals listed in any are dead (the batch twin is
+      ``_scan_pos``'s anti-join on ``_metadata.row_index``).
+      ``pos_match``: when non-empty, ONLY ordinals listed in these pairs
+      emit (the batch twin is ``_cdc_commit_frames``' pos blocks).
+    - ``row_base``: row-lineage marker — an int implicit-id base (ids
+      are base + file ordinal), "phys" when the file materialized
+      ``__row_id``, "null" for a pre-lineage file, None when ids are
+      not requested.
+    - ``tail``: optional ``(change_type, commit_version)`` constants
+      appended to every row (change feed)."""
+
+    def __init__(self, path, rows, layout, fills, anti, match, pos_anti,
+                 pos_match, row_base, tail):
+        self.path = path
+        self.rows = rows
+        self.columns = layout.columns
+        self.structs = layout.structs
+        self.fills = fills
+        self.anti = anti
+        self.match = match
+        self.pos_anti = pos_anti
+        self.pos_match = pos_match
+        self.row_base = row_base
+        self.tail = tail
+
+
+def file_spec(
+    layout: ScanLayout,
+    m: dict,
+    f: str,
+    *,
+    anti=(),
+    match=(),
+    pos: bool = True,
+    pos_match=(),
+    schema_m: dict | None = None,
+    row_ids: bool = False,
+    tail: tuple | None = None,
+) -> FileReadSpec:
+    """Derive the read spec of data file ``f`` as listed by manifest
+    ``m`` — the ONE place nested mapping, initial defaults, delete sets
+    and lineage are decided for every DSv2 reader.
+
+    ``anti`` / ``match``: equality-delete entries ``(file, key,
+    version)`` (``VersionedTable._cdc_applicable`` shape). ``pos``:
+    apply ``m``'s positional deletes targeting ``f``; ``pos_match``:
+    positional-delete manifest entries whose ordinals of ``f`` are the
+    only rows to emit. ``schema_m``: the manifest whose initial
+    defaults and generated columns apply (default ``m``; the append
+    stream passes its window's end manifest). ``row_ids``: attach the
+    ``__row_id`` lineage marker from ``m``'s stats."""
+    sm = m if schema_m is None else schema_m
+    rel = lambda p: os.path.join(layout.data_dir, p)  # noqa: E731
+    fv = m.get("file_versions", {}).get(f, 0)
+    fills = {}
+    defaults = sm.get("column_defaults") or {}
+    gens = sm.get("generated_columns") or {}
+    if defaults or gens:
+        phys = {e["name"]: e["phys"] for e in (sm.get("column_mapping") or [])}
+        slot = {c: i for i, c in enumerate(layout.columns)}
+        for name, g in gens.items():
+            if phys.get(name, name) in slot and fv < int(g["version"]):
+                raise ValueError(
+                    f"generated column {name!r} postdates data file {f}: "
+                    "the versioned_table relation does not compute "
+                    "generated values for older files — read this table "
+                    "via the programmatic VersionedTable.read() API"
+                )
+        for name, dinfo in defaults.items():
+            i = slot.get(phys.get(name, name))
+            if i is None or fv >= int(dinfo["version"]):
+                continue
+            if "value" not in dinfo:
+                raise ValueError(
+                    f"column {name!r} has an initial default whose "
+                    "value predates batch-relation support — read "
+                    "this table via the programmatic "
+                    "VersionedTable.read() API"
+                )
+            v = dinfo["value"]
+            if i in layout.structs and isinstance(v, dict):
+                # the stored value keys by DECLARE-time member names ==
+                # physical names (fresh columns mint phys == logical;
+                # renames never change phys) — so convert through the
+                # physical member list, rename-proof
+                v = tuple(v.get(pm) for pm in layout.structs[i])
+            fills[i] = v
+    # the delete-key FILE stores its column under the logical name at
+    # commit (== the current logical name — renames refuse while
+    # entries live), but data-file rows store PHYSICAL names
+    keyed = lambda entries: [  # noqa: E731
+        (rel(d[0]), d[1], layout.phys_of.get(d[1], d[1])) for d in entries
+    ]
+    pairs = lambda entries: [  # noqa: E731
+        (rel(d["file"]), f) for d in entries if f in d["targets"]
+    ]
+    stats = m.get("stats", {}).get(f, {})
+    row_base = None
+    if row_ids:
+        if "__row_id" in stats:
+            row_base = "phys"
+        else:
+            b = stats.get("__row_base")
+            row_base = int(b) if b is not None else "null"
+    nrows = stats.get("__nrows")
+    return FileReadSpec(
+        rel(f),
+        int(nrows) if nrows is not None else None,
+        layout,
+        fills,
+        keyed(anti),
+        keyed(match),
+        pairs(m.get("pos_deletes", [])) if pos else [],
+        pairs(pos_match),
+        row_base,
+        tail,
+    )
 
 
 def pos_ordinals(pairs) -> set[int]:
@@ -222,15 +401,6 @@ def pos_ordinals(pairs) -> set[int]:
     return out
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, fields: list[str], row_base=None):
-        self.path = path
-        self.fields = fields
-        # row lineage: ids are row_base + ordinal; None when ids are
-        # not requested; "phys" when the file materialized __row_id
-        self.row_base = row_base
-
-
 class _PackedPartition(InputPartition):
     """Several per-file specs read by ONE task (round 14, VERDICT r13
     #2). The Python Data Source runner pays a per-InputPartition cost —
@@ -260,19 +430,11 @@ _PACK_UNKNOWN_ROWS = 1 << 17
 
 
 def pack_budget_rows(options) -> int:
-    """Rows per planned InputPartition: reader option ``pack_rows``
-    wins, else ``$SPARK_GRAFT_DSV2_ROWS_PER_PART`` (the cluster-tuning
-    hook), else the 1M default. ``0`` disables packing (one partition
-    per file — the pre-r14 layout, kept for tests that assert per-file
+    """Rows per planned InputPartition: reader option ``pack_rows``,
+    else the 1M default. ``0`` disables packing (one partition per
+    file — the pre-r14 layout, kept for tests that assert per-file
     pruning)."""
-    import os
-
-    v = options.get("pack_rows")
-    if v is None:
-        v = os.environ.get(
-            "SPARK_GRAFT_DSV2_ROWS_PER_PART", _PACK_DEFAULT_ROWS
-        )
-    return int(v)
+    return int(options.get("pack_rows", _PACK_DEFAULT_ROWS))
 
 
 def pack_partitions(parts: list, budget: int, rows_of) -> list:
@@ -297,71 +459,145 @@ def pack_partitions(parts: list, budget: int, rows_of) -> list:
     return [b[0] if len(b) == 1 else _PackedPartition(b) for b in bins]
 
 
-_ARROW_FALLBACK_WARNED = False
+def _key_hits(tbl, entries):
+    """Boolean mask of ``tbl`` rows whose key is in ANY entry's key set
+    over (keyfile_path, key_col, row_col) triples, or None when no
+    entry's column exists in this file. NULL row values never match
+    (SQL join-on-key semantics), and a key column added after this
+    file was written reads NULL here, so it never matches either."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    hit = None
+    for p, k, rk in entries:
+        if rk not in tbl.column_names:
+            continue
+        col = tbl.column(rk)
+        keys = pq.read_table(p, columns=[k]).column(0)
+        keys = keys.combine_chunks().drop_null()
+        if keys.type != col.type:
+            keys = keys.cast(col.type)
+        h = pc.fill_null(pc.is_in(col, value_set=keys), False)
+        hit = h if hit is None else pc.or_(hit, h)
+    return None if hit is None else hit.to_numpy()
 
 
-def warn_arrow_fallback(exc: Exception) -> None:
-    """ADVICE r13: a silent arrow→row-loop demotion must be observable.
-    One warning per Python worker process, on executor stderr (where
-    UDF prints land — guide §4.6)."""
-    global _ARROW_FALLBACK_WARNED
-    if not _ARROW_FALLBACK_WARNED:
-        _ARROW_FALLBACK_WARNED = True
-        import sys
+def _rebuild_struct(col, members: list, ftype):
+    """Nested field-ID rebuild of one struct column: read the file's
+    PHYSICAL members in logical member order, cast each to its logical
+    type (member promotion), NULL-fill members the file predates, and
+    keep the parent's NULLs."""
+    import pyarrow as pa
 
-        print(
-            "versioned_table: arrow fast path fell back to the row loop: "
-            f"{exc!r}",
-            file=sys.stderr,
+    src = col.combine_chunks()
+    have = {fld.name for fld in src.type}
+    kids = [
+        src.field(pm).cast(fld.type)
+        if pm in have
+        else pa.nulls(len(src), fld.type)
+        for pm, fld in zip(members, ftype)
+    ]
+    return pa.StructArray.from_arrays(
+        kids, fields=list(ftype), mask=src.is_null()
+    )
+
+
+def read_file_spec(spec: FileReadSpec, target):
+    """THE DSv2 executor (batch, stream and change feed): positional
+    and equality selection as one numpy mask over ORIGINAL file
+    ordinals, then column assembly in pyarrow — struct rebuilds,
+    initial defaults, additive-evolution NULL fills, lineage ids and
+    the change-feed tail — cast to ``target``, the arrow form of the
+    schema Spark handed the reader. Returns one pyarrow Table."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    width = len(spec.columns) + (spec.row_base is not None)
+    width += len(spec.tail or ())
+    if width != len(target):
+        raise ValueError(
+            f"versioned_table: planned {width} columns for {spec.path} "
+            f"but the read schema has {len(target)} — the table's schema "
+            "changed since the query was analyzed; restart the read"
         )
+    tbl = pq.read_table(spec.path)
+    n = tbl.num_rows
+    keep = np.ones(n, dtype=bool)
+
+    def ordinals(pairs):
+        dead = pos_ordinals(pairs)
+        idx = np.fromiter(dead, dtype=np.int64, count=len(dead))
+        return idx[idx < n]
+
+    if spec.pos_anti:
+        keep[ordinals(spec.pos_anti)] = False
+    if spec.pos_match:
+        sel = np.zeros(n, dtype=bool)
+        sel[ordinals(spec.pos_match)] = True
+        keep &= sel
+    hit = _key_hits(tbl, spec.anti)
+    if hit is not None:
+        keep &= ~hit
+    if spec.match:
+        hit = _key_hits(tbl, spec.match)
+        # no matchable column in this file: nothing emits
+        keep &= hit if hit is not None else False
+    ords = np.flatnonzero(keep)
+    if len(ords) != n:
+        tbl = tbl.filter(pa.array(keep))
+    nn = tbl.num_rows
+    cols = []
+    for i, pcol in enumerate(spec.columns):
+        ftype = target.field(i).type
+        if i in spec.fills:
+            cols.append(pa.repeat(pa.scalar(spec.fills[i], type=ftype), nn))
+        elif pcol not in tbl.column_names:
+            cols.append(pa.nulls(nn, ftype))  # additive evolution
+        elif i in spec.structs:
+            members = spec.structs[i]
+            cols.append(_rebuild_struct(tbl.column(pcol), members, ftype))
+        else:
+            cols.append(tbl.column(pcol).cast(ftype))
+    rb = spec.row_base
+    if rb is not None:
+        ftype = target.field(len(cols)).type
+        if rb == "phys" and "__row_id" in tbl.column_names:
+            cols.append(tbl.column("__row_id").cast(ftype))
+        elif isinstance(rb, int):
+            cols.append(pa.array(ords + rb).cast(ftype))
+        else:  # pre-lineage file
+            cols.append(pa.nulls(nn, ftype))
+    for v in spec.tail or ():
+        ftype = target.field(len(cols)).type
+        cols.append(pa.repeat(pa.scalar(v, type=ftype), nn))
+    return pa.table(cols, schema=target)
 
 
-class _CDCFilePartition(InputPartition):
-    """One data file's contribution to one commit's change rows.
+def read_partition(partition, schema):
+    """Read one planned InputPartition (a bare spec or a packed run of
+    specs) as Arrow RecordBatches — the ``read()`` of every
+    versioned_table reader. ``schema``: the StructType Spark passed to
+    ``reader``/``streamReader``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    ``anti``: (keyfile_path, key_col) pairs — rows matching ANY are
-    excluded (deletes already applied before this commit).
-    ``match_any``: when non-empty, only rows matching at least one of
-    these (keyfile_path, key_col) pairs emit (the rows this commit
-    deleted/revived).
-    ``pos_anti``: (pairfile_path, target_rel) positional-delete pairs —
-    row ORDINALS of this file listed for ``target_rel`` in any pair
-    file are excluded (they were never live; the batch twin is
-    ``_scan_pos``'s anti-join on ``_metadata.row_index`` — ADVICE r7).
-    ``pos_match``: when non-empty, ONLY row ordinals listed in these
-    (pairfile_path, target_rel) pairs emit — the rows a
-    ``delete_positions`` commit killed, delivered as 'delete'
-    retractions (the batch twin is ``_cdc_commit_frames``' pos block).
-    """
-
-    def __init__(self, path, fields, change, version, anti, match_any,
-                 pos_anti=(), pos_match=(), row_base=None):
-        self.path = path
-        self.fields = fields
-        self.change = change
-        self.version = version
-        self.anti = anti
-        self.match_any = match_any
-        self.pos_anti = list(pos_anti)
-        self.pos_match = list(pos_match)
-        self.row_base = row_base
+    target = to_arrow_schema(schema)
+    specs = (
+        partition.items
+        if isinstance(partition, _PackedPartition)
+        else [partition]
+    )
+    for s in specs:
+        yield from read_file_spec(s, target).to_batches()
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
     def __init__(self, options, schema=None):
         self.root = options["path"]
-        # Arrow fast path (guide §4.2): when Spark hands the parsed
-        # StructType over, read() yields RecordBatches assembled in
-        # pyarrow instead of per-row tuples (a generator of batches IS
-        # an iterator — the partition-reader contract, rule 14e, holds)
-        self._pa_schema = None
-        if schema is not None:
-            try:
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                self._pa_schema = to_arrow_schema(schema)
-            except Exception:  # noqa: BLE001 — unconvertible type
-                self._pa_schema = None
+        # the StructType Spark analyzed; read() yields RecordBatches
+        # cast to it (a generator of batches IS an iterator — the
+        # partition-reader contract, rule 14e, holds)
+        self._schema = schema
         # Delta's skipChangeCommits analogue: deliver added files and
         # IGNORE delete commits in range (consumer accepts that rows
         # retracted after delivery are not re-retracted) instead of
@@ -404,9 +640,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # AvailableNow captures one target up front, so max_versions
         # pacing is steady-state only (see latestOffset).
         self.start_version = int(options.get("starting_version", "0"))
-        # manifest access without a SparkSession (driver-side JSON IO)
-        from unity_to_bigquery_spark.plans.versioned import VersionedTable
-
         # option "branch": stream a BRANCH's commit line (round 9 — the
         # audit-consumer side of write-audit-publish: validate in-flight
         # branch data with a streaming job BEFORE publish). Offsets stay
@@ -418,27 +651,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # drain after the branch is gone fails with NoSuchVersionError
         # rather than silently reading main.
         self.branch = options.get("branch")
-        if self.branch:
-            parent = VersionedTable.__new__(VersionedTable)
-            parent.root = self.root
-            # driver-side manifest IO only — no session, default config
-            parent.spark = None
-            parent.partition_col = None
-            parent.partition_spec = None
-            parent.distinct_index_cols = ()
-            parent.bloom_index_cols = ()
-            parent.bloom_bits = 8192
-            parent.bloom_hashes = 3
-            bs = parent.branches()
-            if self.branch not in bs:
-                raise ValueError(
-                    f"no branch {self.branch!r} in {self.root} "
-                    f"(existing: {sorted(bs)})"
-                )
-            self._t = parent.branch(self.branch)
-        else:
-            self._t = VersionedTable.__new__(VersionedTable)
-            self._t.root = self.root
+        self._t = detached_table(self.root, self.branch)
         # Validate the bootstrap version eagerly (ADVICE r6): a
         # too-high starting_version would otherwise yield a silently
         # EMPTY stream (latestOffset < initialOffset) — a misconfigured
@@ -479,10 +692,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return {"version": latest}
 
     def partitions(self, start: dict, end: dict):
-        import os
-
-        from unity_to_bigquery_spark.plans.versioned import DATA_DIR
-
         lo, hi = start["version"], end["version"]
         # feed the pacing floor with the planned END (covers checkpoint
         # restarts, where initialOffset is never called — the WAL replay
@@ -498,11 +707,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         self._consumed = max(getattr(self, "_consumed", 0) or 0, hi)
         m_end = self._t.manifest(hi)
         if self.emit_changes:
-            return self._pack(
-                self._cdc_partitions(lo, hi, m_end),
-                self._t.manifest(lo),
-                m_end,
-            )
+            return self._pack(self._cdc_partitions(lo, hi, m_end))
         # Append-only path: walk PER COMMIT (not end-vs-base file diff —
         # ADVICE r5: an end-vs-base diff re-delivers rows whenever a
         # rewrite in the window churns files). Per commit:
@@ -517,15 +722,16 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         #   Delta skipChangeCommits semantics (the consumer accepts
         #   missing retractions AND missing rewrites).
         # - pure appends (and metadata-only commits) deliver exactly
-        #   the files they added.
+        #   the files they added, read under the window's END schema
+        #   (its defaults fill files that predate a column).
         from unity_to_bigquery_spark.plans.versioned import VersionedTable
 
         dsig = lambda m: {  # noqa: E731
             (d["file"], d.get("key", "#pos"), d["version"])
             for d in (m.get("deletes") or []) + (m.get("pos_deletes") or [])
         }
-        fields = _phys_fields(m_end)
-        parts: list[_FilePartition] = []
+        layout = scan_layout(self.root, m_end)
+        parts: list[FileReadSpec] = []
         m_prev = self._t.manifest(lo)
         for v in range(lo + 1, hi + 1):
             m_v = self._t.manifest(v)
@@ -548,91 +754,42 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 m_prev = m_v  # skipChangeCommits: drop the whole commit
                 continue
             parts.extend(
-                _FilePartition(
-                    os.path.join(self.root, DATA_DIR, f), fields,
-                    row_base=self._row_base_of(m_v, f),
-                )
+                file_spec(layout, m_v, f, pos=False, schema_m=m_end,
+                          row_ids=self.emit_row_ids)
                 for f in m_v["files"]
                 if f not in prev_files
             )
             m_prev = m_v
-        return self._pack(parts, self._t.manifest(lo), m_end)
+        return self._pack(parts)
 
-    def _pack(self, parts: list, *manifests: dict) -> list:
+    def _pack(self, parts: list) -> list:
         """Bin-pack per-file specs into row-budgeted InputPartitions
-        (round 14 — see _PackedPartition). Per-spec weight is the
-        file's ``__nrows`` manifest stat under any of the given
-        manifests (window start + end covers every file except ones
-        both added AND removed strictly inside the window, which fall
-        back to the conservative unknown weight)."""
-        import os
-
-        from unity_to_bigquery_spark.plans.versioned import DATA_DIR
-
-        if self._pack_rows <= 0 or len(parts) <= 1:
-            return parts
-        rows: dict[str, int] = {}
-        for m in manifests:
-            for f, s in (m.get("stats") or {}).items():
-                n = s.get("__nrows")
-                if n is not None:
-                    rows[os.path.join(self.root, DATA_DIR, f)] = int(n)
-        return pack_partitions(
-            parts, self._pack_rows, lambda p: rows.get(p.path)
-        )
-
-    def _row_base_of(self, m: dict, f: str):
-        """Lineage marker for one file under its listing manifest:
-        the integer implicit-id base, "phys" when the file carries a
-        materialized __row_id column (its stats record the column's
-        range), or None when ids are off/unavailable (pre-enable
-        files emit NULL ids, like the batch read_with_lineage)."""
-        if not self.emit_row_ids:
-            return None
-        s = m.get("stats", {}).get(f, {})
-        if "__row_id" in s:
-            return "phys"
-        b = s.get("__row_base")
-        return int(b) if b is not None else "null"
+        (round 14 — see _PackedPartition), weighted by each file's
+        ``__nrows`` stat under its listing manifest."""
+        return pack_partitions(parts, self._pack_rows, lambda p: p.rows)
 
     def _cdc_partitions(self, lo: int, hi: int, m_end: dict):
         """Per-commit change partitions — the driver-side mirror of
         ``VersionedTable.changes_with_type``'s per-file delete-set diff
-        (see its docstring for the semantics argument). One partition
-        per (file, commit) contribution, so reads parallelize across
-        executors exactly like the append-only path."""
-        import os
+        (see its docstring for the semantics argument). One spec per
+        (file, commit) contribution, read under the manifest the batch
+        twin scans it with (``m_prev`` for rows a commit removed or
+        pos-deleted, ``m_v`` otherwise): that manifest's positional
+        deletes, initial defaults and lineage apply."""
+        from unity_to_bigquery_spark.plans.versioned import VersionedTable
 
-        from unity_to_bigquery_spark.plans.versioned import DATA_DIR, VersionedTable
-
-        fields = _phys_fields(m_end)
-        abspath = lambda f: os.path.join(self.root, DATA_DIR, f)  # noqa: E731
-        # (keyfile_path, keyfile_col, row_col): the delete-key FILE
-        # stores its column under the logical name at commit (== the
-        # current logical name — renames refuse while entries live),
-        # but data-file rows store PHYSICAL names under column mapping
-        phys_of = {
-            e["name"]: e["phys"] for e in (m_end.get("column_mapping") or [])
-        }
-        kf = lambda entries: [  # noqa: E731
-            (abspath(d[0]), d[1], phys_of.get(d[1], d[1])) for d in entries
-        ]
-        parts: list[_CDCFilePartition] = []
+        layout = scan_layout(self.root, m_end)
+        parts: list[FileReadSpec] = []
         m_prev = self._t.manifest(lo)
         for v in range(lo + 1, hi + 1):
             m_v = self._t.manifest(v)
             if str(m_v.get("op", "")).startswith(VersionedTable._CDC_NOOP_OPS):
                 m_prev = m_v
                 continue
-            # per-file pos-pair application, the streaming mirror of the
-            # batch _scan_pos fix (ADVICE r7): carried pos-delete
-            # entries must anti-filter every per-file scan, not just
-            # trip a length check
-            posf = lambda m, f: [  # noqa: E731
-                (abspath(d["file"]), f)
-                for d in m.get("pos_deletes", [])
-                if f in d["targets"]
-            ]
+            spec = lambda m, f, change, anti, **kw: file_spec(  # noqa: E731
+                layout, m, f, anti=anti, row_ids=self.emit_row_ids,
+                tail=(change, v), **kw,
+            )
             prev_files = set(m_prev["files"])
             cur_files = set(m_v["files"])
             app = self._t._cdc_applicable
@@ -642,40 +799,18 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 if b is not None and a == b:
                     continue
                 if b is None:
-                    parts.append(
-                        _CDCFilePartition(abspath(f), fields, "delete", v,
-                                          kf(a), [], posf(m_prev, f),
-                                          row_base=self._row_base_of(m_prev, f))
-                    )
+                    parts.append(spec(m_prev, f, "delete", a))
                     continue
                 new_e = tuple(d for d in b if d not in a)
                 gone_e = tuple(d for d in a if d not in b)
                 if new_e:
-                    parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "delete", v, kf(a), kf(new_e),
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
-                    )
+                    parts.append(spec(m_v, f, "delete", a, match=new_e))
                 if gone_e:
-                    parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "insert", v, kf(b), kf(gone_e),
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
-                    )
+                    parts.append(spec(m_v, f, "insert", b, match=gone_e))
             for f in m_v["files"]:
                 if f not in prev_files:
-                    parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "insert", v, kf(app(m_v, f)), [],
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
-                    )
-            # delete_positions commits: one 'delete' partition per live
+                    parts.append(spec(m_v, f, "insert", app(m_v, f)))
+            # delete_positions commits: one 'delete' spec per live
             # target file, emitting ONLY the newly-killed ordinals
             # (batch twin: _cdc_commit_frames' pos block)
             prev_pair_files = {d["file"] for d in m_prev.get("pos_deletes", [])}
@@ -687,23 +822,15 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 {t for d in new_pos for t in d["targets"]
                  if t in prev_files and t in cur_files}
             ):
-                parts.append(
-                    _CDCFilePartition(
-                        abspath(f), fields, "delete", v,
-                        kf(app(m_prev, f)), [], posf(m_prev, f),
-                        pos_match=[
-                            (abspath(d["file"]), f)
-                            for d in new_pos if f in d["targets"]
-                        ],
-                        row_base=self._row_base_of(m_prev, f),
-                    )
-                )
+                parts.append(spec(
+                    m_prev, f, "delete", app(m_prev, f), pos_match=new_pos
+                ))
             # DROPPED pos-delete entries with surviving targets (a
-            # restore reviving rows in place): one 'insert' partition
-            # per target emitting ONLY the dropped ordinals, excluding
+            # restore reviving rows in place): one 'insert' spec per
+            # target emitting ONLY the dropped ordinals, excluding
             # ordinals still dead under m_v and rows matching the new
             # equality state or DROPPED equality entries (the gone_e
-            # insert partition above already emits those) — the exact
+            # insert spec above already emits those) — the exact
             # streaming twin of the batch revival block (round 9)
             cur_pair_files = {d["file"] for d in m_v.get("pos_deletes", [])}
             gone_pos = [
@@ -718,244 +845,13 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 b = app(m_v, f)
                 gone_eq = tuple(d for d in a if d not in b)
                 parts.append(
-                    _CDCFilePartition(
-                        abspath(f), fields, "insert", v,
-                        kf(b) + kf(gone_eq), [], posf(m_v, f),
-                        pos_match=[
-                            (abspath(d["file"]), f)
-                            for d in gone_pos if f in d["targets"]
-                        ],
-                        row_base=self._row_base_of(m_v, f),
-                    )
+                    spec(m_v, f, "insert", b + gone_eq, pos_match=gone_pos)
                 )
             m_prev = m_v
         return parts
 
-    def _read_arrow(self, partition):
-        """Vectorized executor (guide §4.2): ordinal take + is_in eq
-        filters + column assembly in pyarrow, returning ONE fully-
-        materialized Table cast to the declared arrow schema — any
-        unsupported shape raises BEFORE a batch is yielded so read()
-        can fall back to the row loop. Semantics mirror the row path
-        exactly: positional filters key on ORIGINAL file ordinals
-        (tracked through every filter), NULL key values never match,
-        columns missing from old files NULL-fill, int row_base ids are
-        base + original ordinal."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        target = self._pa_schema
-        tbl = pq.read_table(partition.path)
-        n = tbl.num_rows
-        ords = pa.array(np.arange(n, dtype=np.int64))
-        is_cdc = isinstance(partition, _CDCFilePartition)
-
-        def _keyset(p, k, coltype):
-            keys = pq.read_table(p, columns=[k]).column(0)
-            keys = keys.combine_chunks().drop_null()
-            return keys.cast(coltype) if keys.type != coltype else keys
-
-        if is_cdc:
-            dead = pos_ordinals(partition.pos_anti)
-            match_pos = (
-                pos_ordinals(partition.pos_match)
-                if partition.pos_match
-                else None
-            )
-            if dead or match_pos is not None:
-                # vectorized ordinal selection (VERDICT r13 #8): a
-                # boolean mask built from the ordinal sets, no O(rows)
-                # Python loop
-                mask = np.ones(n, dtype=bool)
-                if dead:
-                    idx = np.fromiter(dead, dtype=np.int64, count=len(dead))
-                    mask[idx[idx < n]] = False
-                if match_pos is not None:
-                    m2 = np.zeros(n, dtype=bool)
-                    if match_pos:
-                        idx = np.fromiter(
-                            match_pos, dtype=np.int64, count=len(match_pos)
-                        )
-                        m2[idx[idx < n]] = True
-                    mask &= m2
-                keep = pa.array(mask)
-                tbl = tbl.filter(keep)
-                ords = pc.filter(ords, keep)
-            hit_any = None
-            for p, k, rk in partition.anti:
-                if rk not in tbl.column_names:
-                    continue  # missing column reads NULL: never matches
-                col = tbl.column(rk)
-                hit = pc.fill_null(
-                    pc.is_in(col, value_set=_keyset(p, k, col.type)), False
-                )
-                hit_any = hit if hit_any is None else pc.or_(hit_any, hit)
-            if hit_any is not None:
-                keep = pc.invert(hit_any)
-                tbl = tbl.filter(keep)
-                ords = pc.filter(ords, keep)
-            if partition.match_any:
-                mm = None
-                for p, k, rk in partition.match_any:
-                    if rk not in tbl.column_names:
-                        continue
-                    col = tbl.column(rk)
-                    hit = pc.fill_null(
-                        pc.is_in(col, value_set=_keyset(p, k, col.type)),
-                        False,
-                    )
-                    mm = hit if mm is None else pc.or_(mm, hit)
-                if mm is None:  # no matchable column: nothing emits
-                    tbl = tbl.slice(0, 0)
-                    ords = ords.slice(0, 0)
-                else:
-                    tbl = tbl.filter(mm)
-                    ords = pc.filter(ords, mm)
-
-        nn = tbl.num_rows
-        cols, i = [], 0
-        for pf in partition.fields:
-            ftype = target.field(i).type
-            if pf in tbl.column_names:
-                cols.append(tbl.column(pf).cast(ftype))
-            else:
-                cols.append(pa.nulls(nn, ftype))  # additive evolution
-            i += 1
-        rb = partition.row_base
-        if rb is not None:
-            ftype = target.field(i).type
-            if rb == "phys":
-                cols.append(
-                    tbl.column("__row_id").cast(ftype)
-                    if "__row_id" in tbl.column_names
-                    else pa.nulls(nn, ftype)
-                )
-            elif isinstance(rb, int):
-                cols.append(pc.add(ords, rb).cast(ftype))
-            else:  # pre-lineage file sentinel
-                cols.append(pa.nulls(nn, ftype))
-            i += 1
-        if is_cdc:
-            cols.append(
-                pc.cast(pa.array([partition.change] * nn), target.field(i).type)
-            )
-            i += 1
-            cols.append(
-                pc.cast(
-                    pa.array([partition.version] * nn), target.field(i).type
-                )
-            )
-            i += 1
-        if i != len(target.names):
-            raise ValueError("schema arity mismatch: row path")
-        return pa.table(cols, schema=target)
-
     def read(self, partition):
-        # executor-side parquet read; column order pinned to the
-        # schema. Packed partitions (round 14) loop their per-file
-        # specs; the arrow path materializes EVERY spec's table before
-        # yielding the first batch so a late fallback can never mix
-        # RecordBatches with row tuples in one partition's output.
-        import pyarrow as pa
-
-        specs = (
-            partition.items
-            if isinstance(partition, _PackedPartition)
-            else [partition]
-        )
-        if self._pa_schema is not None:
-            try:
-                tables = [self._read_arrow(s) for s in specs]
-            except (  # narrowed (ADVICE r13): environment errors
-                ValueError,  # (missing file, permissions) re-raise
-                KeyError,    # instead of paying a doubled read
-                TypeError,
-                NotImplementedError,
-                pa.ArrowException,
-            ) as exc:
-                warn_arrow_fallback(exc)
-                tables = None
-            if tables is not None:
-                for t in tables:
-                    yield from t.to_batches()
-                return
-        for s in specs:
-            yield from self._read_rows(s)
-
-    def _read_rows(self, partition):
-        """Row-at-a-time executor for ONE per-file spec — the fallback
-        for shapes the arrow path refuses (struct rebuilds) and the
-        bit-equality reference the arrow tests compare against."""
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _CDCFilePartition):
-            anti = [
-                (set(pq.read_table(p, columns=[k]).column(0).to_pylist()), rk)
-                for p, k, rk in partition.anti
-            ]
-            match = [
-                (set(pq.read_table(p, columns=[k]).column(0).to_pylist()), rk)
-                for p, k, rk in partition.match_any
-            ]
-            dead_pos = pos_ordinals(partition.pos_anti)
-            match_pos = pos_ordinals(partition.pos_match) if partition.pos_match else None
-            table = pq.read_table(partition.path)
-            tail = (partition.change, partition.version)
-
-            # row.get (not row[k]): files predating an additive schema
-            # evolution lack the key column — NULL-fill like the batch
-            # _scan. None NEVER matches (SQL join-on-key semantics: the
-            # batch changes_with_type's anti/semi joins never match NULL;
-            # Python's `None in {None}` is True and would diverge).
-            def _hits(row, pairs):
-                for s, k in pairs:
-                    v = row.get(k)
-                    if v is not None and v in s:
-                        return True
-                return False
-
-            rb = partition.row_base
-
-            def _rid(idx, row, rb=rb):
-                if rb == "phys":
-                    return row.get("__row_id")
-                if isinstance(rb, int):
-                    return rb + idx
-                return None  # "null": pre-lineage file
-
-            for idx, row in enumerate(table.to_pylist()):
-                # row ordinal within the file == _metadata.row_index:
-                # pyarrow reads preserve file order (batch-twin contract)
-                if idx in dead_pos:
-                    continue
-                if match_pos is not None and idx not in match_pos:
-                    continue
-                if _hits(row, anti):
-                    continue
-                if match and not _hits(row, match):
-                    continue
-                base_t = tuple(row.get(f) for f in partition.fields)
-                if rb is not None:
-                    base_t = base_t + (_rid(idx, row),)
-                yield base_t + tail
-            return
-
-        table = pq.read_table(partition.path)
-        rb = partition.row_base
-        for idx, row in enumerate(table.to_pylist()):
-            # .get: files written before an additive schema evolution
-            # lack the new columns — NULL-fill like the batch _scan
-            base_t = tuple(row.get(f) for f in partition.fields)
-            if rb is not None:
-                if rb == "phys":
-                    base_t = base_t + (row.get("__row_id"),)
-                elif isinstance(rb, int):
-                    base_t = base_t + (rb + idx,)
-                else:
-                    base_t = base_t + (None,)
-            yield base_t
+        return read_partition(partition, self._schema)
 
     def commit(self, end: dict) -> None:
         # the streaming checkpoint owns durability; remembering the
